@@ -1,7 +1,56 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 object Bench {
+  type Query = (SparkSession, String) => DataFrame
+
+  /** Wall seconds of one full run of `fn` (a `count()` of its result),
+    * or what it threw. Operator caches are dropped either way.
+    */
+  private def timed(spark: SparkSession, sfDir: String, fn: Query): Either[Throwable, Double] = {
+    val t0 = System.nanoTime()
+    val run = try Right(fn(spark, sfDir).count()) catch { case e: Throwable => Left(e) }
+    val d = (System.nanoTime() - t0) / 1e9
+    // operators persist intra-query intermediates; drop them so later
+    // runs aren't timed under earlier runs' cache pressure (release
+    // covers the tracked operator persists; clearCache is the
+    // belt-and-braces sweep for anything session-level)
+    Caches.release()
+    spark.catalog.clearCache()
+    run.map(_ => d)
+  }
+
+  /** Times every query in name order: (name, seconds, start offset) for
+    * each one that completed, and (name, error) for each one that threw
+    * in any of its runs — a failure never counts as a timing.
+    */
+  private[graft] def measure(spark: SparkSession, sfDir: String, selected: Map[String, Query])
+      : (Seq[(String, Double, Double)], Seq[(String, Throwable)]) = {
+    val benchT0 = System.nanoTime()
+    val runs = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+      // slow queries get a second run and report the min: on a shared
+      // host a single timing mixes the plan cost with whatever else the
+      // machine was doing, and the noise lands on the slow tail — while
+      // sub-second queries aren't worth doubling the suite's wall time.
+      // If the two runs disagree by >50% the host was busy during one
+      // of them — take a third sample so a contention burst spanning
+      // both runs (the r6 driver artifact's +125 s) still gets one
+      // clean measurement.
+      val started = (System.nanoTime() - benchT0) / 1e9
+      val best = timed(spark, sfDir, fn).flatMap { first =>
+        if (first <= 0.75) Right(first)
+        else timed(spark, sfDir, fn).flatMap { second =>
+          val m2 = math.min(first, second)
+          if (math.abs(first - second) > 0.5 * m2) timed(spark, sfDir, fn).map(math.min(m2, _))
+          else Right(m2)
+        }
+      }
+      (name, best, started)
+    }
+    (runs.collect { case (name, Right(s), s0) => (name, s, s0) },
+      runs.collect { case (name, Left(e), _) => (name, e) })
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -26,18 +75,6 @@ object Bench {
     Seq("lineitem", "orders", "customer", "events", "documents", "embeddings")
       .foreach(t => Tables.table(spark, sfDir, t).count())
 
-    def timed(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      val d = (System.nanoTime() - t0) / 1e9
-      // operators persist intra-query intermediates; drop them so later
-      // runs aren't timed under earlier runs' cache pressure (release
-      // covers the tracked operator persists; clearCache is the
-      // belt-and-braces sweep for anything session-level)
-      Caches.release()
-      spark.catalog.clearCache()
-      d
-    }
     // optional comma-separated subset for focused profiling runs; the
     // driver never sets it, so the committed artifact is always the
     // full suite
@@ -70,27 +107,9 @@ object Bench {
       Caches.release()
       spark.catalog.clearCache()
     }
-    val benchT0 = System.nanoTime()
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      // slow queries get a second run and report the min: on a shared
-      // host a single timing mixes the plan cost with whatever else the
-      // machine was doing, and the noise lands on the slow tail — while
-      // sub-second queries aren't worth doubling the suite's wall time.
-      // If the two runs disagree by >50% the host was busy during one
-      // of them — take a third sample so a contention burst spanning
-      // both runs (the r6 driver artifact's +125 s) still gets one
-      // clean measurement.
-      val started = (System.nanoTime() - benchT0) / 1e9
-      val first = timed(fn)
-      val best =
-        if (first <= 0.75) first
-        else {
-          val second = timed(fn)
-          val m2 = math.min(first, second)
-          if (math.abs(first - second) > 0.5 * m2) math.min(m2, timed(fn)) else m2
-        }
-      (name, best, started)
-    }
+    val (results, failures) = measure(spark, sfDir, selected)
+    failures.foreach { case (name, e) => System.err.println(s"FAILED $name: $e") }
+    val failed = failures.map { case (k, _) => "\"" + k + "\"" }.mkString("[", ",", "]")
     val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     // per-query start offsets (seconds into the bench, 0.1 s grain):
@@ -100,7 +119,7 @@ object Bench {
       s"\"" + k + "\":" + (math.round(s0 * 10.0) / 10.0) }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"t0":$t0s,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"t0":$t0s,"sf":"$sfDir"}"""
     println(line)
     // the full 303-query line above is ~15 KB and the driver's
     // artifact keeps only a few-KB stdout TAIL (BENCH_r6/r7 both show
@@ -110,7 +129,7 @@ object Bench {
     val slowest = results.sortBy(-_._2).take(25)
       .map { case (k, v, _) => s"\"" + k + "\":" + (math.round(v * 1000.0) / 1000.0) }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${math.round(total * 1000.0) / 1000.0},"unit":"sec","queries":$slowest,"n_queries":${results.length},"full":"BENCH_full.json","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${math.round(total * 1000.0) / 1000.0},"unit":"sec","queries":$slowest,"n_queries":${results.length},"failed":$failed,"full":"BENCH_full.json","sf":"$sfDir"}""")
     // the driver's committed artifact truncates long stdout tails — also
     // persist the untruncated per-query map where it can be committed
     try {

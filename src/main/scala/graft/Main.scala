@@ -85,14 +85,7 @@ object Main {
       if (!curate && rest.length > 2) rest(2).split(",").toSeq
       else RefObjectives
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.prepare(spark)
+    val spark = GraftSession.build(s"local[$cpus]", cpus.toInt)
     val report =
       if (curate) graft.report.CurationReport.run(spark, input)
       else run(spark, input, objNames)

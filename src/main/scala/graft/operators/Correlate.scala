@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Caches._
 import graft.Num._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -13,11 +13,12 @@ import org.apache.spark.sql.types.DecimalType
   * `ncc(a, b, lag_max=3)` then rank by |corr|).
   *
   * The reference loops obj×candidate×lag in Python on one core (~320 s).
-  * Here it is one equi-join: explode the small lag set, join the grids on
-  * (bucket, index+lag), and let a single hash-aggregate compute every
-  * (obj, cand, bucket, lag) Pearson cell. The obj side is a handful of
-  * metric names → broadcast; the cand side streams, so at 100 TB the
-  * cost is one shuffle of the candidate grid.
+  * Here the objective windows (a handful of metric names × nodes ×
+  * retention) are collected once and broadcast, and a typed kernel walks
+  * each candidate signal's rows in the grid's own (name, node) layout —
+  * no exchange beyond the one that built the grid — and sums every
+  * (obj, cand, bucket, lag) cell's moments in-task. At 100 TB the cost is
+  * one pass over the candidate grid.
   *
   * Cross-engine determinism: the built-in `corr` aggregate is a parallel
   * double co-moment whose summation order (and algorithm) differs per
@@ -83,41 +84,130 @@ object Correlate {
   }
 
   /** NCC cells: one row per (obj signal, cand signal, bucket, lag) with
-    * Pearson r over aligned grid samples. `minOverlap` drops cells whose
-    * aligned sample count is too small to be meaningful.
+    * Pearson r over aligned grid samples: objective sample (b, i) pairs
+    * with the candidate's sample (b, i + lag) of the same bucket.
+    * `minOverlap` drops cells whose aligned sample count is too small to
+    * be meaningful.
+    *
+    * The objective windows are collected to the driver and broadcast
+    * (one row per objective sample — the lags fan out in the kernel, not
+    * in the shipped rows); each candidate signal is one group of the
+    * relational `(name, node)` grouping ([[SignalKernel]]), so a grid
+    * already hash-partitioned by signal is walked in place. Sums are
+    * exact — `Long` for n, Σx, Σy and 128-bit two-limb `Long` for Σx²,
+    * Σy², Σxy — and each converts to double once, correctly rounded,
+    * exactly as `sum(DECIMAL).cast("double")` does, so r is bit-identical
+    * to the relational [[momentAggs]] form and its oracle replay. Grid
+    * values must be non-null (every grid builder forward-fills).
     */
   def nccLag(indexedGrid: DataFrame, objNames: Seq[String], lagMax: Int = 3,
-             minOverlap: Int = 8, pinBroadcast: Boolean = true): DataFrame = {
-    // obj and cand branches split the same quantized grid; persisted so
-    // the grid-build pipeline runs once, not once per branch. The
-    // result is lazy, so release follows the prefixJaccard convention:
-    // batch callers clearCache() after consuming, long-lived sessions
-    // rely on the ContextCleaner GC-ing the unreferenced frame.
-    val q = withQuant(indexedGrid).persist().tracked
-    val obj = q.filter(col("name").isin(objNames: _*))
-      .select(col("name").as("obj_name"), col("node").as("obj_node"),
-        col("b"), col("i"), col("qv").as("ov"))
-    val cand = q.filter(!col("name").isin(objNames: _*))
-      .select(col("name").as("cand_name"), col("node").as("cand_node"),
-        col("b").as("cb"), col("i").as("ci"), col("qv").as("cv"))
-    val moments = momentAggs("ov", "cv")
-    // the obj×lags side is a handful of signals (objNames × nodes ×
-    // retention) — pin the broadcast so the plan stays a
-    // BroadcastHashJoin with the candidate grid streaming regardless of
-    // what AQE estimates at 100× the data. `pinBroadcast = false` is
-    // the escape hatch for deployments whose objective set × retention
-    // outgrows the broadcast limit (the hint would then OOM where an
-    // AQE-chosen sort-merge join completes). Lags fan out inline on the
-    // obj rows (a generator in the same stage) rather than via a
-    // range-frame cross join — one fewer stage and broadcast build.
-    val objLags = obj.withColumn("lag",
-      explode(sequence(lit(-lagMax.toLong), lit(lagMax.toLong))))
-    val build = if (pinBroadcast) broadcast(objLags) else objLags
-    val cells = build
-      .join(cand, col("ci") === col("i") + col("lag") && col("cb") === col("b"))
-      .groupBy("obj_name", "obj_node", "cand_name", "cand_node", "b", "lag")
-      .agg(moments.head, moments.tail: _*)
+             minOverlap: Int = 8): DataFrame = {
+    val spark = indexedGrid.sparkSession
+    import spark.implicits._
+    // a sample with a null bucket or index aligns with nothing (SQL
+    // equality); dropped after the quantization window so the magnitude
+    // M still sees every sample
+    val q = withQuant(indexedGrid)
+      .filter(col("b").isNotNull && col("i").isNotNull)
+      .select(col("name"), col("node"), col("b").cast("long").as("b"),
+        col("i").cast("long").as("i"), col("qv").cast("long").as("qv"))
+    val isObj = col("name").isin(objNames: _*)
+    val windows: Map[Long, Array[ObjWindow]] =
+      q.filter(isObj).as[(String, String, Long, Long, Long)].collect()
+        .groupBy(r => (r._3, r._1, r._2)).toArray
+        .map { case ((b, name, node), xs) => b -> ObjWindow(name, node, xs.map(_._4), xs.map(_._5)) }
+        .groupMap(_._1)(_._2)
+    val bc = spark.sparkContext.broadcast(windows)
+    val cells = SignalKernel.perSignal(q.filter(!isObj), candEnc) {
+      (key: (String, String), it: Iterator[(String, String, Long, Long, Long)]) =>
+        val (cand, cnode) = key
+        val rows = it.toArray.sortBy(r => (r._3, r._4))
+        val out = Seq.newBuilder[(String, String, String, String, Long, Long, Long,
+          Double, Double, Double, Double, Double)]
+        val m = new Moments
+        var from = 0
+        while (from < rows.length) {
+          val b = rows(from)._3
+          var until = from
+          while (until < rows.length && rows(until)._3 == b) until += 1
+          bc.value.get(b).foreach { objs =>
+            // first row of each index run in this bucket's slice
+            val at = scala.collection.mutable.LongMap.empty[Int]
+            var k = until - 1
+            while (k >= from) { at.update(rows(k)._4, k); k -= 1 }
+            objs.foreach { w =>
+              var lag = -lagMax.toLong
+              while (lag <= lagMax) {
+                m.reset()
+                var p = 0
+                while (p < w.idx.length) {
+                  val ci = w.idx(p) + lag
+                  var c = at.getOrElse(ci, until)
+                  while (c < until && rows(c)._4 == ci) {
+                    m.add(w.qv(p), rows(c)._5)
+                    c += 1
+                  }
+                  p += 1
+                }
+                if (m.n > 0 && m.n >= minOverlap)
+                  out += ((w.name, w.node, cand, cnode, b, lag, m.n, m.sx.toDouble,
+                    m.sy.toDouble, m.sxy.toDouble, m.sxx.toDouble, m.syy.toDouble))
+                lag += 1
+              }
+            }
+          }
+          from = until
+        }
+        out.result()
+    }.toDF("obj_name", "obj_node", "cand_name", "cand_node", "b", "lag",
+      "n", "sx", "sy", "sxy", "sxx", "syy")
     pearsonFromMoments(cells, minOverlap)
+  }
+
+  /** One objective signal's samples (index, quantized value) in one bucket. */
+  private final case class ObjWindow(name: String, node: String,
+                                     idx: Array[Long], qv: Array[Long])
+
+  private val candEnc = Encoders.tuple(Encoders.STRING, Encoders.STRING,
+    Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
+
+  /** Exact 128-bit two's-complement accumulator (two `Long` limbs). */
+  private final class Int128 {
+    var hi = 0L
+    var lo = 0L
+    def reset(): Unit = { hi = 0L; lo = 0L }
+    def addProduct(x: Long, y: Long): Unit = {
+      val p = x * y
+      val sum = lo + p
+      hi += Math.multiplyHigh(x, y) +
+        (if (java.lang.Long.compareUnsigned(sum, lo) < 0) 1L else 0L)
+      lo = sum
+    }
+    /** Correctly rounded, as BigInteger.doubleValue / Spark's DECIMAL cast. */
+    def toDouble: Double =
+      if (hi == (lo >> 63)) lo.toDouble
+      else java.math.BigInteger.valueOf(hi).shiftLeft(64)
+        .or(new java.math.BigInteger(java.lang.Long.toUnsignedString(lo)))
+        .doubleValue
+  }
+
+  /** The five exact moment sums of one NCC cell. Quantized values are at
+    * most 1e9 in magnitude ([[withQuant]]), so Σx and Σy fit a `Long`.
+    */
+  private final class Moments {
+    var n = 0L
+    var sx = 0L
+    var sy = 0L
+    val sxx = new Int128
+    val syy = new Int128
+    val sxy = new Int128
+    def reset(): Unit = {
+      n = 0L; sx = 0L; sy = 0L; sxx.reset(); syy.reset(); sxy.reset()
+    }
+    def add(x: Long, y: Long): Unit = {
+      n += 1; sx += x; sy += y
+      sxx.addProduct(x, x); syy.addProduct(y, y); sxy.addProduct(x, y)
+    }
   }
 
   /** For each (obj, cand, bucket): the lag with max |r| (mathbox max_corr,

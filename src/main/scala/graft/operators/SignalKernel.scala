@@ -38,7 +38,8 @@ import org.apache.spark.sql.functions.col
   *
   * Input: exactly 4 columns — name (string), node (string), a long
   * sort/time column, and the value column (Double for [[perSignalD]],
-  * Long for [[perSignalL]]).
+  * Long for [[perSignalL]]); [[perSignal]] takes any shape that leads
+  * with name and node.
   */
 private[operators] object SignalKernel {
   private implicit val keyEnc: Encoder[(String, String)] =
@@ -52,19 +53,20 @@ private[operators] object SignalKernel {
 
   def perSignalD[U: Encoder](rows: DataFrame)(
       f: ((String, String), Iterator[(String, String, Long, Double)]) => IterableOnce[U])
-      : Dataset[U] =
-    rows.toDF("_1", "_2", "_3", "_4")
-      .as[(String, String, Long, Double)](rowEncD)
-      .groupBy(col("_1"), col("_2"))
-      .as[(String, String), (String, String, Long, Double)](keyEnc, rowEncD)
-      .flatMapGroups((k, it) => f(k, it).iterator)
+      : Dataset[U] = perSignal(rows, rowEncD)(f)
 
   def perSignalL[U: Encoder](rows: DataFrame)(
       f: ((String, String), Iterator[(String, String, Long, Long)]) => IterableOnce[U])
-      : Dataset[U] =
-    rows.toDF("_1", "_2", "_3", "_4")
-      .as[(String, String, Long, Long)](rowEncL)
+      : Dataset[U] = perSignal(rows, rowEncL)(f)
+
+  /** The walk over any row shape whose first two columns are name and
+    * node, decoded positionally with `rowEnc`.
+    */
+  def perSignal[T, U: Encoder](rows: DataFrame, rowEnc: Encoder[T])(
+      f: ((String, String), Iterator[T]) => IterableOnce[U]): Dataset[U] =
+    rows.toDF(rows.columns.indices.map(i => s"_${i + 1}"): _*)
+      .as[T](rowEnc)
       .groupBy(col("_1"), col("_2"))
-      .as[(String, String), (String, String, Long, Long)](keyEnc, rowEncL)
+      .as[(String, String), T](keyEnc, rowEnc)
       .flatMapGroups((k, it) => f(k, it).iterator)
 }

@@ -2,7 +2,7 @@ package graft.report
 
 import graft.Num._
 import graft.operators.{ChangePoints, Correlate, TimeSeries}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -18,7 +18,9 @@ import org.apache.spark.storage.StorageLevel
   * Caching contract: `adviseSignals` persists the shared grid
   * (MEMORY_AND_DISK). It is released on `spark.catalog.clearCache()`;
   * batch callers (Main, Bench) clear after consuming the result, and a
-  * long-lived session can call [[release]] explicitly.
+  * long-lived session can call [[release]] explicitly. The objective
+  * anomaly rows of a grid are kept on the driver ([[objectiveAnomalies]])
+  * until the grid is released or garbage-collected.
   */
 object AdvisorReport {
 
@@ -43,11 +45,6 @@ object AdvisorReport {
     // instead of three (TimeSeries.gridOnePass doc; bit-equality to
     // the operator-composed form pinned by TimeSeriesSpec)
     TimeSeries.gridOnePass(signals, cfg.stepSec, cfg.bucketSec)
-
-  /** Dense forward-filled grid from the events table. */
-  def buildGrid(events: DataFrame, cfg: Config = Config()): DataFrame =
-    buildGridFromSignals(
-      TimeSeries.signalsFromEvents(events, cfg.nodeMod), cfg)
 
   /** The reference's validity gate (metrics_advisor.py:146): drop
     * signals whose whole-series range is ≤ minRange — flat signals
@@ -111,18 +108,35 @@ object AdvisorReport {
     // permutation-test detector on non-objective signals would be pure
     // waste (it was the dominant cost of the end-to-end query: the
     // candidate population is |signals|, the objective set is O(1)).
-    val anomalies = ChangePoints.anomalyUnion(
-      grid.filter(col("name").isin(cfg.objNames: _*))
-        .select("name", "node", "tsb", "gval"), bucket = cfg.bucketSec,
-      permutations = cfg.permutations, maxPoints = cfg.maxPoints)
-    val anomalousObjBuckets = anomalies
-      .filter(col("name").isin(cfg.objNames: _*))
-      .select(col("name").as("obj_name"), col("node").as("obj_node"), col("b"))
-      .distinct()
+    val spark = grid.sparkSession
+    import spark.implicits._
+    val anomalousObjBuckets = objectiveAnomalies(grid, cfg)
+      .map(r => (r.getAs[String]("name"), r.getAs[String]("node"), r.getAs[Long]("b")))
+      .distinct.toSeq.toDF("obj_name", "obj_node", "b")
     val ranked = Correlate.topCorr(
       Correlate.nccLag(gateBuckets(grid, cfg), cfg.objNames), cfg.topK)
     ranked.join(anomalousObjBuckets, Seq("obj_name", "obj_node", "b"))
       .orderBy("obj_name", "obj_node", "b", "rank")
+  }
+
+  private val detected = new java.util.WeakHashMap[DataFrame, (Config, Array[Row])]()
+
+  /** The anomaly rows (name, node, tsb, kind, b) of `grid`'s objective
+    * slice, detected once per (grid, cfg) and kept on the driver: the
+    * advice joins on their buckets and the report's chart markers are
+    * their changepoints, so one report runs the permutation tests once.
+    * Bounded by objectives × nodes × anomalies per series.
+    */
+  private[graft] def objectiveAnomalies(grid: DataFrame, cfg: Config): Array[Row] = {
+    val known = detected.synchronized(Option(detected.get(grid)))
+    known.collect { case (c, rows) if c == cfg => rows }.getOrElse {
+      val rows = ChangePoints.anomalyUnion(
+        grid.filter(col("name").isin(cfg.objNames: _*))
+          .select("name", "node", "tsb", "gval"), bucket = cfg.bucketSec,
+        permutations = cfg.permutations, maxPoints = cfg.maxPoints).collect()
+      detected.synchronized(detected.put(grid, (cfg, rows)))
+      rows
+    }
   }
 
   /** Normalized per-bucket series for the signals the report shows —
@@ -173,7 +187,11 @@ object AdvisorReport {
   /** Release the pipeline's cached grid — scoped to the frame the
     * pipeline itself persisted, never the caller's session-wide cache.
     */
-  def release(grid: DataFrame): Unit = { grid.unpersist(); () }
+  def release(grid: DataFrame): Unit = {
+    detected.synchronized(detected.remove(grid))
+    grid.unpersist()
+    ()
+  }
 
   /** Inline SVG line chart of normalized series — the rendered artifact
     * counterpart of the reference's matplotlib PNGs
@@ -289,14 +307,10 @@ object AdvisorReport {
       // anomaly positions for the vline markers: the reference draws
       // its axvlines at the CHANGEPOINT timestamps of the objective
       // (metrics_advisor.py:156 builds anomaly_ts from cp only) — the
-      // objective-slice detector rerun here is O(objectives), tiny
+      // same rows that gated the advice when it was built with `cfg`
       val anomTs: Map[(String, String, Long), Seq[Long]] =
-        ChangePoints.anomalyUnion(
-            g.filter(col("name").isin(cfg.objNames: _*))
-              .select("name", "node", "tsb", "gval"),
-            bucket = cfg.bucketSec)
-          .filter(col("kind") === "changepoint")
-          .collect()
+        objectiveAnomalies(g, cfg)
+          .filter(_.getAs[String]("kind") == "changepoint")
           .groupBy(r => (r.getAs[String]("name"), r.getAs[String]("node"),
             r.getAs[Long]("b")))
           .view.mapValues(_.map(_.getAs[Long]("tsb")).toSeq.sorted).toMap
@@ -329,7 +343,7 @@ object AdvisorReport {
       }
     }
     grid.foreach { g =>
-      val causal = causalSignals(g).limit(50).collect()
+      val causal = causalSignals(g, cfg).limit(50).collect()
       if (causal.nonEmpty) {
         sb.append("\n## Likely drivers (Granger)\n\n")
         sb.append("| objective | candidate | F | p |\n")

@@ -1,8 +1,13 @@
 package graft.sources
 
+import com.univocity.parsers.csv.CsvParser
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Reader for the reference's reshaped-metrics bundles
   * (metrics_advisor.py:38-48): a directory of wide CSVs, one per metric,
@@ -10,10 +15,13 @@ import org.apache.spark.sql.functions._
   * device. Melts every file into the engine's long signal format
   * (name, node, tsec, value); the metric name comes from the file name.
   *
-  * Each file is its own schema, so files are enumerated and unioned —
-  * the per-file DataFrames are lazy scans, and the union is one job. A
-  * bundle has hundreds of metrics (small files); the heavy data lives in
-  * the rows, which stream through the melt without materializing wide.
+  * Each file is its own schema, so files are enumerated and unioned.
+  * Headers are read on the driver (first line of each file, parsed and
+  * de-duplicated exactly as Spark's header inference does), so building
+  * the per-file scans launches no job; every execution of the result
+  * then parses each file once. A bundle has hundreds of metrics (small
+  * files); the heavy data lives in the rows, which stream through the
+  * melt without materializing wide.
   */
 object MetricsCsv {
 
@@ -25,7 +33,8 @@ object MetricsCsv {
     // Hadoop Path cannot represent at any stage (SPARK-32097) — list the
     // directory ourselves and read colon-named local files through
     // sanitized symlinks (what an untar-stage renamer would do).
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(dir).getFileSystem(hadoopConf)
     val files = fs.listStatus(new Path(dir))
       .map(_.getPath)
       .filter(p => p.getName.endsWith(".csv") && !p.getName.startsWith("._"))
@@ -39,14 +48,15 @@ object MetricsCsv {
             java.nio.file.Files.createSymbolicLink(link, java.nio.file.Paths.get(p.toUri))
           link.toUri.toString
         } else p.toUri.toString
-      val df = spark.read.option("header", "true").option("inferSchema", "false")
-        .csv(readablePath)
-      val valueCols = df.columns.filter(_ != "timestamp")
+      val columns = headerColumns(spark, readablePath, hadoopConf)
+      val valueCols = columns.filter(_ != "timestamp")
       // a metric exported with zero node columns (cluster-4048 ships
       // one such file) carries no data — skip it rather than emit a
       // zero-arg stack() the parser rejects
-      if (valueCols.isEmpty || !df.columns.contains("timestamp")) None
+      if (valueCols.isEmpty || !columns.contains("timestamp")) None
       else {
+        val df = spark.read.schema(StructType(columns.map(StructField(_, StringType))))
+          .option("header", "true").csv(readablePath)
         val stackArgs = valueCols.map(c => s"'${c.replace("'", "")}', CAST(`$c` AS DOUBLE)").mkString(", ")
         Some(df.selectExpr(
           s"'${name.replace("'", "")}' AS name",
@@ -70,9 +80,26 @@ object MetricsCsv {
     // aggregates. Dropped BEFORE the sample gate so signal validity
     // counts real samples only.
     val clean = all.filter(col("value").isNotNull && !isnan(col("value")))
-    val keep = clean.groupBy("name", "node").agg(count(lit(1)).as("n_samples"))
+    // a per-signal window count, not aggregate + self-join: the join
+    // made every execution scan the files twice (once per side)
+    clean.withColumn("n_samples", count(lit(1)).over(Window.partitionBy("name", "node")))
       .filter(col("n_samples") > minSamples)
-      .select("name", "node")
-    clean.join(keep, Seq("name", "node"))
+      .drop("n_samples")
+  }
+
+  /** The column names `spark.read.option("header", "true").csv(path)`
+    * infers, without its inference job: the first non-empty line, parsed
+    * with the reader's own univocity settings and made safe (empty cells
+    * become `_c<i>`, duplicates get their index appended) by the same
+    * Spark helpers. Empty for an empty file.
+    */
+  private def headerColumns(spark: SparkSession, path: String,
+                            conf: org.apache.hadoop.conf.Configuration): Array[String] = {
+    val options = new CSVOptions(Map("header" -> "true"), true,
+      spark.conf.get("spark.sql.session.timeZone"))
+    CSVUtils.readHeaderLine(new Path(path), options, conf)
+      .map(line => CSVUtils.makeSafeHeader(new CsvParser(options.asParserSettings).parseLine(line),
+        spark.conf.get("spark.sql.caseSensitive").toBoolean, options))
+      .getOrElse(Array.empty[String])
   }
 }

@@ -176,4 +176,32 @@ class AdvisorReportSpec extends SparkTestBase {
     assert(rels.nonEmpty)
     assert(rels.forall(v => v >= -1.0001 && v <= 1.0001), "normalization out of range")
   }
+
+  test("chart markers are the changepoints of the anomaly pass built with cfg") {
+    val cfg19 = cfg.copy(permutations = 19)
+    val grid = AdvisorReport.gatedGrid(signals, cfg19)
+    val md = AdvisorReport.renderMarkdown(
+      AdvisorReport.adviseOnGrid(grid, cfg19), Some(grid), cfg = cfg19)
+    val changepoints = graft.operators.ChangePoints.anomalyUnion(
+        grid.filter(col("name") === "click").select("name", "node", "tsb", "gval"),
+        bucket = cfg19.bucketSec, permutations = cfg19.permutations,
+        maxPoints = cfg19.maxPoints)
+      .filter(col("kind") === "changepoint")
+      .select("b", "tsb").as[(Long, Long)].collect()
+    // per charted bucket: the dashed vline x positions (svgChart's
+    // sample-index → pixel map over the bucket's 24 hourly samples)
+    val charts = md.split("### bucket ").drop(1).map { sec =>
+      val b = sec.takeWhile(_.isDigit).toLong
+      b -> """<line x1="([0-9.]+)"[^>]*stroke-dasharray="4 3"""".r
+        .findAllMatchIn(sec).map(_.group(1)).toSeq
+    }.toMap
+    assert(charts.nonEmpty && changepoints.nonEmpty)
+    val want = charts.keys.map { b =>
+      b -> changepoints.filter(_._1 == b).map(_._2).sorted.toSeq
+        .map(ts => f"${4 + (ts - b) / 3600L * 356.0 / 23}%.1f").distinct
+    }.toMap
+    assert(charts == want)
+    assert(charts.values.exists(_.nonEmpty), "no marker drawn")
+    AdvisorReport.release(grid)
+  }
 }
